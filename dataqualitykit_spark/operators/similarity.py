@@ -66,6 +66,75 @@ def _py_fold_norm(v):
     return math.sqrt(acc)
 
 
+def _kept_mask(ids, q_ids):
+    """(n, Q) bool mask of the (corpus row, query) pairs Spark's
+    `query_id != neighbor_id` filter keeps: False on a NULL neighbor id
+    and where the ids are equal. Equal ids are found by a hash lookup of
+    each corpus id in the distinct query ids, so only the rows that
+    match some query are compared against the query columns."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    keep = np.ones((len(ids), len(q_ids)), dtype=bool)
+    keep[ids.is_null().to_numpy(zero_copy_only=False)] = False
+    uniq = pc.unique(q_ids)
+    slot = pc.fill_null(pc.index_in(ids, value_set=uniq), -1).to_numpy()
+    rows = np.nonzero(slot >= 0)[0]
+    if len(rows):
+        q_slot = pc.index_in(q_ids, value_set=uniq).to_numpy()
+        r, c = np.nonzero(slot[rows, None] == q_slot[None, :])
+        keep[rows[r], c] = False
+    return keep
+
+
+# two cosines further apart than this round to strictly ordered values
+# under Spark's round(x, 6), whatever their decimal digits (see cosine_topk)
+_ROUND_MARGIN = 2e-6
+
+
+def _topk_superset(cos, keep, k, null=None, ids=None):
+    """(rows, cols) of the pairs in one (n, Q) batch that can still reach
+    the global top-k of their query column under the window's order
+    (round(cosine, 6) DESC NULLS LAST, neighbor_id ASC).
+
+    Per column with more than k kept non-NULL pairs, `kth` is the k-th
+    largest raw cosine (NaN counts as the largest, as Spark sorts it);
+    every pair with cosine >= kth - _ROUND_MARGIN and every NaN pair is
+    emitted. A dropped pair has k pairs of its own batch that round to a
+    strictly larger value, so it ranks below k whatever the other batches
+    hold. Columns with at most k kept non-NULL pairs emit all of them.
+
+    `null` marks NULL cosines (per-pair path only). They rank after every
+    non-NULL pair, ties broken by neighbor id, so a column with m < k
+    non-NULL pairs also emits its k - m NULL pairs of smallest id (`ids`,
+    the batch's neighbor ids), ties at the cut included."""
+    import numpy as np
+
+    if k < 1:  # the window's rank <= k filter keeps nothing
+        return np.nonzero(np.zeros_like(keep))
+    n = cos.shape[0]
+    valid = keep if null is None else keep & ~null
+    m = valid.sum(axis=0)
+    nan = np.isnan(cos)
+    thresh = np.full(cos.shape[1], -np.inf)
+    full = m > k
+    if full.any():
+        vals = np.where(valid, np.where(nan, np.inf, cos), -np.inf)
+        kth = np.partition(vals, n - k, axis=0)[n - k]
+        thresh[full] = kth[full] - _ROUND_MARGIN
+    sel = valid & ((cos >= thresh[None, :]) | nan)
+    if null is not None:
+        short = keep & null & (m < k)[None, :]
+        if short.any():
+            import pyarrow.compute as pc
+
+            id_rank = pc.rank(ids, tiebreaker="min").to_numpy()
+            key = np.where(short, id_rank[:, None], np.iinfo(np.int64).max)
+            cut = np.sort(key, axis=0)[np.clip(k - m, 1, n) - 1, np.arange(len(m))]
+            sel |= short & (key <= cut[None, :])
+    return np.nonzero(sel)
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -80,6 +149,18 @@ def cosine_topk(
     (query_id, neighbor_id, cosine, rank), deterministic tie-break on
     neighbor id.
 
+    Each Arrow batch emits only a superset of its own per-query top-k
+    (_topk_superset), not all of its n x Q pairs, so the window sorts
+    about batches x k x Q rows instead of N x Q. The superset is exact,
+    not approximate: per query it keeps every pair within 2e-6 of the
+    batch's k-th largest raw cosine. Spark's round(x, 6) is HALF_UP on
+    the double's decimal form, which never decreases as x grows, so two
+    cosines more than 1e-6 apart round to strictly ordered values and a
+    dropped pair already has k pairs of its own batch ranked strictly
+    ahead of it. The window still does all of the ranking; no numpy copy
+    of Spark's rounding is needed. Worst case: when every pair of a batch
+    ties (a corpus of duplicates), the batch emits all n x Q pairs.
+
     Values are bit-identical to the interpreted-fold form this replaces:
     the kernel loops over DIMENSIONS and vectorizes over rows, so every
     (query, corpus) accumulator sees the same left-to-right sequence of
@@ -93,7 +174,8 @@ def cosine_topk(
     NULL semantics match the fold form: NULL vector, NULL element, or a
     query/corpus length mismatch yield NULL cosine (zip_with pads +
     null-propagating fold); NULL ids drop out of the != filter; a
-    zero-norm pair raises like ANSI division by zero.
+    zero-norm pair raises like ANSI division by zero, checked on every
+    kept pair before any is dropped.
     """
     import numpy as np
     import pyarrow as pa
@@ -165,13 +247,8 @@ def cosine_topk(
                 and pc.min_max(lens)["min"].as_py() == dim
                 and pc.min_max(lens)["max"].as_py() == dim
             )
-            nid_idx = pa.array(np.repeat(np.arange(n, dtype=np.int64), n_q))
-            out_nid = ids.take(nid_idx)
-            out_qid = q_id_arr.take(
-                pa.array(np.tile(np.arange(n_q, dtype=np.int64), n))
-            )
-            # pairs Spark's != filter drops: equal ids or NULL neighbor id
-            keep = pc.fill_null(pc.invert(pc.equal(out_qid, out_nid)), False)
+            keep = _kept_mask(ids, q_id_arr)
+            null = None
             if regular:
                 c_mat = np.ascontiguousarray(
                     flat.to_numpy(zero_copy_only=False)
@@ -184,36 +261,30 @@ def cosine_topk(
                 for d in range(dim):
                     dot = dot + c_mat[:, d : d + 1] * q_mat[None, :, d]
                 div = q_nrm[None, :] * c_nrm[:, None]
-                keep_np = keep.to_numpy(zero_copy_only=False).reshape(n, n_q)
-                if np.any((div == 0.0) & keep_np):
+                if np.any((div == 0.0) & keep):
                     raise ArithmeticError(
                         "cosine_topk: division by zero (ANSI)"
                     )
-                cos = pa.array(
-                    (dot / np.where(div == 0.0, np.nan, div)).reshape(-1)
-                )
+                cos = dot / np.where(div == 0.0, np.nan, div)
             else:
                 rows = v.to_pylist()
                 norms = [_py_fold_norm(r) for r in rows]
-                vals, mask = [], []
-                for i in range(n):
-                    for j in range(n_q):
-                        c = (
-                            _pair_cosine(rows[i], norms[i], j)
-                            if keep[i * n_q + j].as_py()
-                            else None
-                        )
-                        vals.append(c)
-                        mask.append(c is None)
-                cos = pa.array(
-                    [0.0 if m else x for x, m in zip(vals, mask)],
-                    type=pa.float64(),
-                    mask=np.array(mask),
-                )
-            out = pa.RecordBatch.from_arrays(
-                [out_qid, out_nid, cos], names=["query_id", "neighbor_id", "cosine"]
+                cos = np.full((n, n_q), np.nan)
+                null = np.ones((n, n_q), dtype=bool)
+                for i, j in zip(*np.nonzero(keep)):
+                    c = _pair_cosine(rows[i], norms[i], j)
+                    if c is not None:
+                        cos[i, j] = c
+                        null[i, j] = False
+            r, c = _topk_superset(cos, keep, k, null, ids)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    q_id_arr.take(pa.array(c)),
+                    ids.take(pa.array(r)),
+                    pa.array(cos[r, c], mask=None if null is None else null[r, c]),
+                ],
+                names=["query_id", "neighbor_id", "cosine"],
             )
-            yield out.filter(keep)
 
     sims = corpus.select(
         F.col(id_col).alias("neighbor_id"),
@@ -240,8 +311,9 @@ def cosine_topk_blocked(
     once into a numpy matrix (it is small by contract), broadcast, and each
     corpus partition streams through mapInPandas computing a
     (batch x queries) similarity matrix with one BLAS gemm per Arrow batch.
-    Per-partition top-k candidates then reduce to global top-k via one
-    tiny window. ~50x less interpreter overhead than per-pair array folds;
+    Each batch emits only its per-query top-k superset (the same
+    _topk_superset rule as cosine_topk), reduced to the global top-k by
+    one window. ~50x less interpreter overhead than per-pair array folds;
     this is the scale path, cosine_topk is the per-pair reference.
 
     Same output contract as cosine_topk: (query_id, neighbor_id, cosine
@@ -258,9 +330,11 @@ def cosine_topk_blocked(
     q_rows = queries.select(
         F.col(id_col).alias("qid"), F.col(vec_col).cast("array<double>").alias("v")
     ).collect()
+    # NULL query ids never survive the query_id != neighbor_id filter
+    q_rows = [r for r in q_rows if r["qid"] is not None]
     if not q_rows:
         return corpus.sparkSession.createDataFrame([], _TOPK_SCHEMA)
-    q_ids = np.array([r["qid"] for r in q_rows])
+    q_ids = pa.array([r["qid"] for r in q_rows], type=pa.int64())
     q_mat = np.array([r["v"] for r in q_rows])  # (Q, D)
     if q_mat.ndim != 2:
         raise ValueError("cosine_topk_blocked: ragged query embedding dims")
@@ -279,7 +353,7 @@ def cosine_topk_blocked(
             n = batch.num_rows
             if n == 0:
                 continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
+            ids = batch.column(0)
             v = batch.column(1)
             if v.null_count:
                 raise ValueError("cosine_topk_blocked: null embedding rows")
@@ -298,30 +372,11 @@ def cosine_topk_blocked(
             norms = np.linalg.norm(mat, axis=1, keepdims=True)
             norms[norms == 0] = 1.0
             sims = (mat / norms) @ q_norm.T  # (B, Q)
-            rows = []
-            # per-block top-k by the SAME composite key the global window
-            # ranks on — (round(cosine,6) DESC, neighbor_id ASC) — so the
-            # global top-k is guaranteed inside the union of block top-ks
-            # even when many candidates tie at the rounding boundary
-            rounded = np.round(sims, 6)
-            for qi in range(sims.shape[1]):
-                order = np.lexsort((ids, -rounded[:, qi]))
-                taken = 0
-                for bi in order:
-                    if taken >= k:
-                        break
-                    if ids[bi] != q_ids[qi]:
-                        rows.append((int(q_ids[qi]), int(ids[bi]), float(sims[bi, qi])))
-                        taken += 1
-            qcol, ncol, scol = (
-                (np.array([r[0] for r in rows], dtype=np.int64),
-                 np.array([r[1] for r in rows], dtype=np.int64),
-                 np.array([r[2] for r in rows], dtype=np.float64))
-                if rows
-                else (np.array([], dtype=np.int64),) * 2 + (np.array([], dtype=np.float64),)
-            )
+            r, c = _topk_superset(sims, _kept_mask(ids, q_ids), k)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(qcol), pa.array(ncol), pa.array(scol)], schema=out_pa
+                [q_ids.take(pa.array(c)), ids.take(pa.array(r)).cast(pa.int64()),
+                 pa.array(sims[r, c])],
+                schema=out_pa,
             )
 
     candidates = corpus.select(

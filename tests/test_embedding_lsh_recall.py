@@ -362,53 +362,57 @@ def test_semantic_dedup_multi_probe_recovers_boundary_pairs(spark):
     assert again == {k: (v["keep"], v["component"], v["cell"]) for k, v in probe2.items()}
 
 
+def fold_form(corpus, queries, k):
+    """The interpreted JVM fold cosine_topk's kernel replaced: a broadcast
+    cross join, the same window and the same rank filter. The reference
+    every cosine_topk kernel test compares against."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from dataqualitykit_spark.operators.similarity import _cosine_hoisted, _norm
+
+    q = queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("qvec"),
+    ).withColumn("_qn", _norm(F.col("qvec")))
+    c = corpus.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("cvec"),
+    ).withColumn("_cn", _norm(F.col("cvec")))
+    sims = (
+        c.crossJoin(F.broadcast(q))
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            _cosine_hoisted(
+                F.col("qvec"), F.col("cvec"), F.col("_qn"), F.col("_cn")
+            ).alias("cosine"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.round(F.col("cosine"), 6).desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        sims.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .withColumn("cosine", F.round("cosine", 6))
+    )
+
+
+def rows_of(df):
+    return sorted(
+        (r["query_id"], r["neighbor_id"], repr(r["cosine"]), r["rank"])
+        for r in df.collect()
+    )
+
+
 def test_cosine_topk_kernel_matches_fold_form(spark, planted):
     """The r7 numpy dot kernel inside cosine_topk must be bit-identical to
     the interpreted JVM fold it replaced (dim-loop = same left-to-right
     IEEE adds), including NULL semantics: NULL vector / NULL element /
     ragged dims -> NULL cosine, NULL ids drop out of the != filter."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
-
-    from dataqualitykit_spark.operators.similarity import (
-        _cosine_hoisted,
-        _norm,
-    )
-
-    def fold_form(corpus, queries, k):
-        q = queries.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("qvec"),
-        ).withColumn("_qn", _norm(F.col("qvec")))
-        c = corpus.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").cast("array<double>").alias("cvec"),
-        ).withColumn("_cn", _norm(F.col("cvec")))
-        sims = (
-            c.crossJoin(F.broadcast(q))
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                _cosine_hoisted(
-                    F.col("qvec"), F.col("cvec"), F.col("_qn"), F.col("_cn")
-                ).alias("cosine"),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.round(F.col("cosine"), 6).desc(), F.col("neighbor_id").asc()
-        )
-        return (
-            sims.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .withColumn("cosine", F.round("cosine", 6))
-        )
-
-    def rows_of(df):
-        return sorted(
-            (r["query_id"], r["neighbor_id"], repr(r["cosine"]), r["rank"])
-            for r in df.collect()
-        )
 
     queries = planted.filter("vec_id >= 1000")
     corpus = planted.filter("vec_id < 1000")
@@ -440,3 +444,121 @@ def test_cosine_topk_kernel_matches_fold_form(spark, planted):
         similarity.cosine_topk(adv, adv.filter("vec_id < 0"), k=3).collect()
         == []
     )
+
+
+def _unit_pair(a):
+    """[a, b] whose fold norm is exactly 1.0, so its cosine with [1, 0]
+    is exactly the double a in the fold form and in both kernels."""
+    import math
+
+    b = math.sqrt(1.0 - a * a)
+    for _ in range(64):
+        n = math.sqrt(a * a + b * b)
+        if n == 1.0:
+            return [a, b]
+        b = math.nextafter(b, 0.0 if n > 1.0 else 1.0)
+    raise AssertionError(a)
+
+
+@pytest.fixture
+def small_batches(spark):
+    """7-row Arrow batches, so every corpus spans many kernel calls."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    yield
+    spark.conf.set(key, prev)
+
+
+def test_cosine_topk_multi_batch_matches_fold_form(spark, planted, small_batches):
+    """Each 7-row batch emits only its per-query top-k superset; the union
+    must still hold the global top-k: k=0, k=1, batches of fewer than k
+    rows (k=10), exactly k (k=7) and k+1 (k=6) kept rows, NULL and NaN
+    cosines (NULLs rank last, NaN first), and the gemm kernel at the
+    same batch size."""
+    from pyspark.sql import functions as F
+
+    queries = planted.filter("vec_id >= 1000")
+    corpus = planted.filter("vec_id < 1000")
+    for k in (0, 1, 6, 7, 10):
+        got = rows_of(similarity.cosine_topk(corpus, queries, k=k))
+        assert got == rows_of(fold_form(corpus, queries, k=k)), k
+        assert len(got) == N_QUERIES * k
+    blocked = {
+        (r["query_id"], r["neighbor_id"], r["rank"]): r["cosine"]
+        for r in similarity.cosine_topk_blocked(corpus, queries, k=5).collect()
+    }
+    brute = {
+        (r["query_id"], r["neighbor_id"], r["rank"]): r["cosine"]
+        for r in similarity.cosine_topk(corpus, queries, k=5).collect()
+    }
+    assert set(blocked) == set(brute)
+    assert all(abs(blocked[key] - cos) < 1e-9 for key, cos in brute.items())
+
+    adv = spark.createDataFrame(
+        [
+            (1, [1.0, 2.0, 3.0]),
+            (2, [3.0, 2.0, 1.0]),
+            (3, None),
+            (4, [1.0, None, 3.0]),
+            (5, [1.0, 2.0]),
+            (None, [9.0, 9.0, 9.0]),
+            (7, [2.0, 2.0, 2.0]),
+            (8, [float("nan"), 1.0, 1.0]),
+        ]
+        * 3,
+        "vec_id bigint, embedding array<double>",
+    )
+    qs = adv.filter((F.col("vec_id") < 5) | F.col("vec_id").isNull()).distinct()
+    for k in (1, 2):
+        got = rows_of(similarity.cosine_topk(adv, qs, k=k))
+        assert got == rows_of(fold_form(adv, qs, k=k)) and got, k
+
+
+def test_cosine_topk_half_up_boundary_and_ties_across_batches(spark, small_batches):
+    """Cosines under 1e-6 apart straddle a HALF_UP boundary: the double
+    0.5000005 rounds to 0.500001 in Spark while np.round gives 0.5, and
+    the 0.5 rows with the smallest ids rank ahead of the raw-larger ones.
+    A batch must emit all of them, not its raw or np.round top-k. Then an
+    all-duplicate corpus, where every pair ties and the neighbor-id
+    tiebreak crosses batches."""
+    schema = "vec_id bigint, embedding array<double>"
+    up = [(200, _unit_pair(0.5000005))]
+    below = [(100 - j, _unit_pair(0.5000005 - j * 1e-8)) for j in range(1, 7)]
+    far = [(j, _unit_pair(0.4999 - j * 1e-3)) for j in range(1, 8)]
+    corpus = spark.createDataFrame(up + below + far, schema).coalesce(1)
+    queries = spark.createDataFrame([(1000, [1.0, 0.0])], schema)
+    for k in (1, 3, 8):
+        want = rows_of(fold_form(corpus, queries, k=k))
+        assert (1000, 200, "0.500001", 1) in want
+        assert rows_of(similarity.cosine_topk(corpus, queries, k=k)) == want, k
+        assert rows_of(similarity.cosine_topk_blocked(corpus, queries, k=k)) == want, k
+
+    dup = spark.createDataFrame([(i, [1.0, 2.0, 3.0]) for i in range(40)], schema)
+    qs = spark.createDataFrame(
+        [(5, [1.0, 2.0, 3.0]), (100, [1.0, 2.0, 3.0])], schema
+    )
+    got = rows_of(similarity.cosine_topk(dup, qs, k=5))
+    assert got == rows_of(fold_form(dup, qs, k=5))
+    assert [n for q, n, _, _ in got if q == 5] == [0, 1, 2, 3, 4]
+    assert [n for q, n, _, _ in got if q == 100] == [0, 1, 2, 3, 4]
+    assert rows_of(similarity.cosine_topk_blocked(dup, qs, k=5)) == got
+
+
+def test_cosine_topk_zero_norm_raises_on_kept_pairs_only(spark):
+    """A zero-norm pair raises ANSI division by zero on both kernel
+    branches; a zero-norm row whose only pairing is with its own id is
+    dropped by the != filter and raises nothing."""
+    schema = "vec_id bigint, embedding array<double>"
+    corpus = spark.createDataFrame([(1, [0.0, 0.0]), (2, [1.0, 2.0])], schema)
+    zero_q = corpus.filter("vec_id = 1")
+    # a query with a NULL element sends every batch down the per-pair path
+    per_pair_q = zero_q.unionByName(spark.createDataFrame([(9, [1.0, None])], schema))
+    for qs in (zero_q, per_pair_q):
+        with pytest.raises(Exception, match="(?i)division by zero"):
+            similarity.cosine_topk(corpus, qs, k=1).collect()
+
+    solo = corpus.filter("vec_id = 1")
+    assert similarity.cosine_topk(solo, solo, k=1).collect() == []
+    got = similarity.cosine_topk(solo, solo.unionByName(per_pair_q), k=1).collect()
+    assert [tuple(r) for r in got] == [(9, 1, None, 1)]
